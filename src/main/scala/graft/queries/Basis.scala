@@ -303,9 +303,10 @@ object Basis {
       // each round references its input edge frame THREE times (degree
       // agg + two semi-join probes): without a barrier the co-purchase
       // lineage re-executes 3^rounds times (measured 48 s at sf0.1 —
-      // the round-6 bench caught it). Lazy localCheckpoints (the BFS/CC
-      // discipline) flatten every round to one materialization while
-      // keeping the first plan reference execution-free.
+      // the round-6 bench caught it). localCheckpoint(false) (the BFS/CC
+      // discipline) flattens every round to one materialization. It is
+      // not execution-free: under AQE each round's checkpoint runs that
+      // round's shuffle stages as jobs when it is built, before any action.
       def peel(e: DataFrame): DataFrame =
         kcoreRound(e, k).localCheckpoint(false)
       // kcore keeps its e0 checkpoint (unlike bfs/sp/label-prop): each

@@ -11,11 +11,13 @@ import U._
   *
   * Scale notes: PageRank runs in 1e-9 fixed-point BIGINT (deterministic
   * across engines AND across partitionings — float mass would drift with
-  * merge order); each iteration is one shuffle join on src + one
-  * partial-aggregated sum on dst. The binned range join turns an interval
-  * containment predicate into an equi-join on the month bin with a range
-  * residual — the shape that keeps a point-in-interval join off the
-  * nested-loop path when BOTH sides are large. The outlier query compares
+  * merge order); each iteration is one join on src + one partial-
+  * aggregated sum-and-count on dst that also yields the next round's
+  * per-edge share, and the node list joins once, after the last round.
+  * The binned range join turns an interval containment predicate into an
+  * equi-join on the month bin with a range residual — the shape that
+  * keeps a point-in-interval join off the nested-loop path when BOTH
+  * sides are large. The outlier query compares
   * n·σ²-scaled squared deviations in DECIMAL(38,0) — no sqrt, no float
   * compare, so the flag set is bit-identical in DuckDB's HUGEINT mirror.
   * The kNN graph bounds candidates by IVF cell (16 cells, 5 probes ⇒
@@ -219,28 +221,34 @@ object Insights {
 
     // PageRank, 3 iterations, on the bipartite customer↔supplier graph
     // (edges = distinct order→supply relationships, both directions).
-    // Ranks live in 1e-9 fixed point: contrib = pr div deg and
-    // pr' = 0.15 + 0.85·Σcontrib all in BIGINT — exact, order-independent,
+    // Ranks live in 1e-9 fixed point: share = pr div deg and
+    // pr' = 0.15 + 0.85·Σshare all in BIGINT — exact, order-independent,
     // and identical in the DuckDB unrolled-CTE mirror. Headroom: 85·Σ
     // stays under 2^63 up to ~10^7 nodes; past that the same query runs
     // with DECIMAL(38,0) ranks. Dangling mass (customers with no orders)
     // is dropped, the standard simplified formulation.
+    // Each round is one join and one aggregate: the edge list is
+    // symmetric and distinct, so count(*) over a node's in-edges IS its
+    // out-degree, and the next share comes out of the same groupBy that
+    // sums this round's mass. A node with no edges never sends and never
+    // receives, so the node list joins once, after the last round, and
+    // fills those nodes at the 0.15 base (every edge endpoint is a node —
+    // TPC-H foreign keys; InsightsSpec pins both properties).
     "q_graph_pagerank" -> ((s, d) => {
       val edges = U.coPurchaseEdges(s, d)
       val nodes = Tables(s, d, "customer").select(col("c_custkey").as("id"))
         .unionAll(Tables(s, d, "supplier")
           .select((col("s_suppkey") + U.supplierIdOffset).as("id")))
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      val e = edges.join(deg, "src")
-      var r = nodes.select(col("id"), lit(1000000000L).as("pr"))
-      for (_ <- 1 to 3) {
-        val in = e.join(r, e("src") === r("id"))
-          .select(col("dst"), expr("pr div deg").as("m"))
-          .groupBy("dst").agg(sum(col("m")).as("msum"))
-        r = nodes.join(in, nodes("id") === in("dst"), "left")
-          .select(col("id"), expr("150000000 + (85 * coalesce(msum, 0)) div 100").as("pr"))
-      }
-      r.orderBy("id")
+      val pr = "150000000 + (85 * sum(share)) div 100"
+      def step(share: org.apache.spark.sql.DataFrame, out: String, name: String) =
+        edges.join(share, edges("src") === share("id"))
+          .groupBy(col("dst").as("id")).agg(expr(out).as(name))
+      var share = edges.groupBy(col("src").as("id"))
+        .agg(expr("1000000000 div count(1)").as("share"))
+      for (_ <- 1 to 2) share = step(share, s"($pr) div count(1)", "share")
+      nodes.join(step(share, pr, "pr"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("pr"), lit(150000000L)).as("pr"))
+        .orderBy("id")
     }),
 
     // Weekly cohort retention triangle: users cohorted by first active

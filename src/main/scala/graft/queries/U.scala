@@ -277,7 +277,7 @@ object U {
     * the bucketed-table idiom): the frame is hash-repartitioned on `src`
     * and persisted, so every iterative consumer's per-round src-keyed
     * join/aggregate (BFS frontier expansion, k-core degree counts,
-    * label-prop/louvain message passing, pagerank out-degree sends) reads
+    * label-prop/louvain message passing, pagerank share sends) reads
     * the cached partitioning instead of re-shuffling the full edge list
     * each round — the e-side Exchange disappears from every round
     * (frontier frames are checkpointed RDDs with no stats, so those joins
@@ -301,11 +301,13 @@ object U {
         e.repartition(col("src")).sortWithinPartitions("src")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else
-        // cache-disabled: still truncate the lineage (lazy, execution-
-        // free until first use) so the iterative consumers' per-round
-        // references replay RDD blocks, not the full orders⋈lineitem
-        // re-derivation + re-shuffle each round (r14 advisor item — the
-        // un-persisted branch silently regressed every graph round)
+        // cache-disabled: still truncate the lineage so the iterative
+        // consumers' per-round references replay RDD blocks, not the full
+        // orders⋈lineitem re-derivation + re-shuffle each round (without
+        // it the un-persisted branch silently regressed every graph
+        // round). Not lazy: under AQE, building the checkpoint's RDD
+        // runs the upstream shuffle stages as jobs right here; only the
+        // last stage and the block write wait for the first action.
         e.localCheckpoint(false)
     }
 
@@ -346,8 +348,9 @@ object U {
         e.repartition(col("src")).sortWithinPartitions("src")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else
-        // cache-disabled: lazy lineage truncation, same rationale as
-        // [[coPurchaseEdges]]'s no-cache branch
+        // cache-disabled: lineage truncation, same rationale (and the
+        // same construction-time jobs under AQE) as [[coPurchaseEdges]]'s
+        // no-cache branch
         e.localCheckpoint(false)
     }
 

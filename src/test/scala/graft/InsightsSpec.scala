@@ -44,6 +44,35 @@ class InsightsSpec extends SparkSpec {
       "isolated node rank != exact damping base (mass leaked in)")
   }
 
+  test("pagerank: one join per round plus one node join; the node tables are read once") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val lp = SparkEntry.queries("q_graph_pagerank")(spark, sf).queryExecution.optimizedPlan
+    // a customer/supplier read is a leaf carrying the table's own key
+    // (an InMemoryRelation with the cache on, a parquet relation off)
+    def reads(key: String) = lp.collectLeaves().count(_.output.exists(_.name == key))
+    assert(reads("c_custkey") == 1, s"customer read ${reads("c_custkey")}×:\n$lp")
+    assert(reads("s_suppkey") == 1, s"supplier read ${reads("s_suppkey")}×:\n$lp")
+    val joins = lp.collect { case j: Join => j }.size
+    assert(joins == 4, s"$joins joins, expected 3 rounds + 1 node join:\n$lp")
+  }
+
+  test("co-purchase edges are distinct, symmetric and land on customer/supplier keys") {
+    // q_graph_pagerank reads a node's out-degree off its in-edge count
+    // and joins the node list only after the last round; both rest on this
+    val e = queries.U.coPurchaseEdges(spark, sf).collect()
+      .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst")))
+    assert(e.nonEmpty)
+    val pairs = e.toSet
+    assert(pairs.size == e.length, "duplicate (src, dst) pair")
+    assert(pairs.forall { case (a, b) => pairs((b, a)) }, "an edge lacks its reverse")
+    val nodes = Tables(spark, sf, "customer").select("c_custkey")
+      .collect().map(_.getLong(0)).toSet ++
+      Tables(spark, sf, "supplier").select("s_suppkey")
+        .collect().map(_.getLong(0) + queries.U.supplierIdOffset)
+    val stray = pairs.flatMap { case (a, b) => Seq(a, b) }.filterNot(nodes)
+    assert(stray.isEmpty, s"edge endpoints outside the node list: ${stray.take(5)}")
+  }
+
   test("retention cohort: offset 0 equals cohort size; later offsets never exceed it") {
     val rows = SparkEntry.queries("q_ts_retention_cohort")(spark, sf).collect()
     val byCohort = rows.groupBy(_.getString(0))
