@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for scale-critical queries
   * so pushdown/pruning/broadcast/codegen shape can be reviewed per round.
   *
@@ -38,16 +36,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else defaultSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n============================== $n ==============================")

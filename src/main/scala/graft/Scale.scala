@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *
   * `probe` times a fixed set of scale-critical queries across sf-dirs and
   * prints one JSON line per (dir, query) — the data behind the
-  * linear-scaling table in BASELINE.md.
+  * linear-scaling table in BASELINE.md. Besides the declared queries it
+  * accepts the non-declared [[extraProbes]]: only the plans that carry a
+  * scaling law or a platform comparison remain there.
   *
   * Usage:
   *   runMain graft.Scale gen    <srcDir> <outDir> [factor]
@@ -26,23 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Non-declared A/B control plans, probe-able by name alongside the
-    * declared inventory (e.g. the coarse custkey-only range join the
-    * binned `q_join_theta_range` replaced). */
+  /** Non-declared plans, probe-able by name alongside the declared
+    * inventory. Each one carries a scaling law or a platform comparison
+    * that BASELINE.md still cites: the coarse custkey-only range join the
+    * binned `q_join_theta_range` replaced, the quantizer-growth kNN,
+    * label-noise and semantic-dedup geometries, the raw-string
+    * source-overlap join, the banded pHash search, and the unsalted
+    * skew join left to AQE. */
   val extraProbes: Map[String, graft.queries.U.Q] = Map(
     "x_join_theta_coarse" -> graft.queries.Joins.thetaRangeCoarse,
-    // checkpoint-strategy A/B behind the r4 kmeans bench regression: the
-    // r4 "lazy" two-consumer form measured 2× the fused declared plan
-    // (both broadcast builds race the unmaterialized checkpoint and each
-    // executes the full lineage); eager ≈ fused + one wasted cache write
-    "x_kmeans_lazy_ckpt" -> ((s, d) => graft.queries.Learn.kmeansWith(s, d, "lazy")),
-    "x_kmeans_eager_ckpt" -> ((s, d) => graft.queries.Learn.kmeansWith(s, d, "eager")),
-    "x_kmeans_no_ckpt" -> ((s, d) => graft.queries.Learn.kmeansWith(s, d, "none")),
-    // wjaccard tf-frame checkpoint A/B: "lazy" is the declared form;
-    // "none" re-derives the (doc, term) shuffle per consumer (or lets
-    // ReuseExchange dedupe it); "memo" derives once per (session, dir)
-    "x_wjaccard_no_ckpt" -> ((s, d) => graft.queries.Llm.wjaccardWith(s, d, "none")),
-    "x_wjaccard_memo_ckpt" -> ((s, d) => graft.queries.Llm.wjaccardWith(s, d, "memo")),
     // IVF quantizer-growth probes: bits chosen so 2^bits tracks N
     // (base 4 bits / 16 cells at sf0.1's 2k vectors → 7 bits at ×10,
     // 11 bits at ×100), holding per-cell population ~constant — the
@@ -79,12 +73,6 @@ object Scale {
     // declared q_llm_source_overlap's 60-bit fold + memo was measured
     // against (403/79.6 vs 72.9/41.4 s at ×100)
     "x_source_overlap_strkey" -> graft.queries.Audit.sourceOverlapStrKey,
-    // the round-9 token-frame A/B's runnable artifact: a representative
-    // flat-explode consumer fed from the memoized U.tokenStream instead
-    // of its declared inline explode (the memo LOST in-suite — see
-    // U.tokenStream's scaladoc and BASELINE.md "shared token frame")
-    "x_entropy_tokmemo" -> ((s, d) => graft.queries.Learn.entropyFrom(
-      graft.queries.U.tokenStream(s, d).select("doc_id", "term"))),
     // (the sketch source-overlap variant was promoted to the DECLARED
     // surface in-round — q_llm_source_overlap_sketch; probe it by name)
     // banded aHash Hamming search — measured and NOT declared: exact
@@ -118,22 +106,7 @@ object Scale {
     "q_llm_bpe_pairs", "q_ts_ewma", "q_stream_session", "q_llm_tfidf")
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // stable codegen class names: AQE assigns codegen stage ids in
-      // nondeterministic order, so the id-in-class-name default makes
-      // byte-identical generated code miss the Janino cache and
-      // recompile per invocation (r15, measured in Bench.scala)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(GraftSession.cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

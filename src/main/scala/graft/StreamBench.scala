@@ -85,30 +85,18 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = GraftSession.sfDir
     val batchRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "5000").toInt
+    // bucket/state TTL of the *_ttl scenarios
+    val ttlMs = sys.env.getOrElse("SPARK_GRAFT_BAND_TTL_MS", "2000").toLong
     val scenarios =
       if (args.nonEmpty) args.toSeq
       else Seq("session", "kalman", "chained", "multitouch", "bandcollide")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // stable codegen class names: AQE assigns codegen stage ids in
-      // nondeterministic order, so the id-in-class-name default makes
-      // byte-identical generated code miss the Janino cache and
-      // recompile per invocation (r15, measured in Bench.scala)
-      .config("spark.sql.codegen.useIdInClassName", "false")
+    val spark = GraftSession.builder(GraftSession.cpus)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // track sizes so stateMemory/rocksdb metrics are populated
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -256,7 +244,6 @@ object StreamBench {
       // cross-window collisions whose elder fell out first (A/B against
       // the unbounded bandcollide row's cand_pairs).
       case "bandcollide_ttl" =>
-        val ttlMs = sys.env.getOrElse("SPARK_GRAFT_BAND_TTL_MS", "2000").toLong
         import org.apache.spark.sql.streaming.Trigger
         val bandRows = graft.queries.Llm.bandKeyFrame(spark, sfDir)
           .selectExpr("CAST(band_id AS INT) AS band_id", "bkey", "doc_id")
@@ -329,7 +316,6 @@ object StreamBench {
       // exactly the cross-window dups (delta vs that row's
       // confirmed_pairs — and vs the batch confirm, printed alongside).
       case "dedupconfirm_ttl" =>
-        val ttlMs = sys.env.getOrElse("SPARK_GRAFT_BAND_TTL_MS", "2000").toLong
         import org.apache.spark.sql.streaming.Trigger
         val arrivals = graft.queries.Llm.docArrivalFrame(spark, sfDir)
           .select("doc_id", "shingles", "bands")

@@ -22,7 +22,7 @@ object Tables {
     * MB-scale tables). At 100 TB you would NOT persist base tables — set
     * SPARK_GRAFT_CACHE=false to read straight from parquet, which restores
     * full predicate pushdown / column pruning at the scan. */
-  private val cacheEnabled: Boolean =
+  private[graft] val cacheEnabled: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false"
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -50,7 +50,7 @@ object Insights {
         .withColumn("rn", row_number().over(w))
         .withColumn("arr", collect_list(col("tot")).over(w.rowsBetween(0, 6)))
         .where(size(col("arr")) === 7)
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
+      if (Tables.cacheEnabled)
         wins.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else wins
     }
@@ -721,7 +721,7 @@ object Insights {
       val node = deg.join(tcnt, Seq("id"), "left")
         .select(col("id"), col("deg"),
           coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
+      if (Tables.cacheEnabled)
         node.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else node
     }

@@ -153,7 +153,7 @@ object Llm {
     * over longs keeps the single doc-keyed shuffle inside
     * HashAggregate. The band key then drops the score and hashes only
     * the winner's 28-bit term id (m % 2²⁸) — the 0-bit CWS rule; see
-    * the band construction note in wjaccardWith. Ties break by
+    * the band construction note in wjaccard. Ties break by
     * (score, term-hash), mirrored verbatim in the oracle. */
   private def cwsSig(tf: org.apache.spark.sql.DataFrame)
     : org.apache.spark.sql.DataFrame = {
@@ -165,8 +165,11 @@ object Llm {
               % 1000000 + 1) / 1000000.0), 9)""").as(s"u$h")
         }: _*)
     // uh is the KB-scale vocab artifact — always broadcast; the sig
-    // frame (one row per doc) is lazily checkpointed so the band
-    // self-join reads it instead of deriving the aggregate twice
+    // frame (one row per doc) is checkpointed so the band self-join
+    // reads it instead of deriving the aggregate twice. Under AQE
+    // localCheckpoint(false) is not lazy: it runs the upstream shuffle
+    // stages (termTf's checkpoint, the doc-keyed aggregate) as jobs
+    // when this frame is constructed
     tf.join(broadcast(uh), "term")
       .groupBy("doc_id")
       .agg(
@@ -185,10 +188,11 @@ object Llm {
     s"CAST(round(round(u$h / tf, 9) * 1e9) AS BIGINT) * 268435456 + tid"
 
   /** Per-doc bigram-shingle frequencies — the weighted shingle frame.
-    * Lazily localCheckpointed (the orderBrandSets discipline): FIVE
-    * consumers (vocab distinct, the signature join, both confirm
-    * sides, the size frame) would otherwise each re-run the tokenize +
-    * (doc, term) shuffle.
+    * localCheckpointed (the orderBrandSets discipline): FIVE consumers
+    * (vocab distinct, the signature join, both confirm sides, the size
+    * frame) would otherwise each re-run the tokenize + (doc, term)
+    * shuffle. Under AQE the checkpoint is not lazy: constructing it
+    * runs the (doc, term) aggregate's shuffle stages as jobs.
     *
     * The repartition BEFORE the checkpoint is load-bearing, measured:
     * AQE coalesces this small aggregate's shuffle to ~1 partition, and
@@ -199,24 +203,18 @@ object Llm {
     * parallelism through the checkpoint AND pre-partitions the frame
     * for the doc-keyed signature/size aggregates (no further shuffle):
     * full query 12.6 → 2.1 s fresh-materialized at sf0.1. */
-  private def termTf(s: org.apache.spark.sql.SparkSession, d: String,
-      ckpt: String = "lazy"): org.apache.spark.sql.DataFrame = {
-    val base = Tables(s, d, "documents").withColumn("tk", toks)
+  private def termTf(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables(s, d, "documents").withColumn("tk", toks)
       .select(col("doc_id"), explode(U.grams2).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    def par = base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    ckpt match {
-      case "none" => base
-      case "memo" => graft.Memo(s, s"wj-tf:$d")(par.localCheckpoint(true))
-      case _      => par.localCheckpoint(false)
-    }
-  }
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      .localCheckpoint(false)
 
-  /** The full wjaccard pipeline over a given tf frame — shared by the
-    * declared query and the Scale checkpoint-strategy A/B probes. */
-  private[graft] def wjaccardWith(s: org.apache.spark.sql.SparkSession,
-      d: String, ckpt: String): org.apache.spark.sql.DataFrame = {
-    val tf = termTf(s, d, ckpt)
+  /** The weighted-Jaccard (CWS) dedup pipeline — q_llm_dedup_wjaccard. */
+  private def wjaccard(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val tf = termTf(s, d)
     // Band keys hash the sample IDENTITY ONLY (the 28-bit term id,
     // m % 2²⁸) — the 0-bit CWS semantics. Hashing the full packed atom
     // would additionally require the argmin term's tf to match in both
@@ -446,7 +444,7 @@ object Llm {
     // only — weighted Jaccard Σmin(tf)/Σmax(tf) ≥ 0.8 computed from
     // the identity Σmax = sza + szb − Σmin with exact BIGINT tf sums,
     // one float division at the compare.
-    "q_llm_dedup_wjaccard" -> ((s, d) => wjaccardWith(s, d, "lazy")),
+    "q_llm_dedup_wjaccard" -> ((s, d) => wjaccard(s, d)),
 
     // ROUGE-2 overlap grading (SURVEY §2.35) — the eval-metric view of
     // the dedup family: for every banding CANDIDATE pair, the

@@ -266,7 +266,7 @@ object U {
         .select(col("o_custkey").as("cust"),
           (col("l_suppkey") + supplierIdOffset).as("supp"))
         .distinct()
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
+      if (graft.Tables.cacheEnabled)
         oi.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else oi
     }
@@ -293,7 +293,7 @@ object U {
       val oi = coPurchase(s, d)
       val e = oi.select(col("cust").as("src"), col("supp").as("dst"))
         .unionAll(oi.select(col("supp").as("src"), col("cust").as("dst")))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
+      if (graft.Tables.cacheEnabled)
         // sortWithinPartitions completes the bucket+sort idiom: the cached
         // plan's outputOrdering satisfies SMJ consumers' sort requirement,
         // so the per-run e-side Sort disappears too (one sort at
@@ -326,7 +326,7 @@ object U {
         .groupBy(col("o_custkey").as("cust"),
           (col("l_suppkey") + supplierIdOffset).as("supp"))
         .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w"))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
+      if (graft.Tables.cacheEnabled)
         oi.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else oi
     }
@@ -340,7 +340,7 @@ object U {
       val oi = coPurchaseWeighted(s, d)
       val e = oi.select(col("cust").as("src"), col("supp").as("dst"), col("w"))
         .unionAll(oi.select(col("supp").as("src"), col("cust").as("dst"), col("w")))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
+      if (graft.Tables.cacheEnabled)
         // sortWithinPartitions completes the bucket+sort idiom: the cached
         // plan's outputOrdering satisfies SMJ consumers' sort requirement,
         // so the per-run e-side Sort disappears too (one sort at
@@ -352,36 +352,6 @@ object U {
         // same construction-time jobs under AQE) as [[coPurchaseEdges]]'s
         // no-cache branch
         e.localCheckpoint(false)
-    }
-
-  /** ONE corpus-wide exploded token stream (doc_id, lang, source, term)
-    * — the flat-explode twin of the [[coPurchase]] memo discipline,
-    * A/B'd round 9 under the 19 flat-explode consumers and **NOT
-    * adopted**: the memo LOST in-suite (sf0.1 warm Σ 12.25 → 12.08 s
-    * ~noise with cold 28.9 → 29.6 s worse; ×10 warm Σ 18.28 → 19.15 s
-    * WORSE — BASELINE.md "shared token frame"). Why it loses where the
-    * coPurchase/srcgrams memos win: those cache the output of an
-    * EXPENSIVE derivation (a fact join; 16 md5 draws per row), while
-    * tokenize+explode is a codegen'd map over the already-cached
-    * documents scan — and the exploded frame is WIDER than its source
-    * (one row per token × 3 carried columns), so reading it back from
-    * cache costs more than recomputing it. The one win it contained
-    * (q_llm_langid consumes the frame TWICE per plan: ×10 warm
-    * 2.71 → 1.05 s) is specifically a COLUMNAR-cache-reread win — a
-    * single-query lazy localCheckpoint was measured too (2.76 s, no
-    * help: the RDD-row checkpoint reread costs what the second
-    * codegen'd explode costs), so langid stays inline rather than
-    * adopting a whole-corpus cache for one query. Kept as the runnable
-    * A/B artifact (`x_entropy_tokmemo` probes a representative consumer
-    * through it); not referenced by any declared query. */
-  def tokenStream(s: SparkSession, d: String): DataFrame =
-    graft.Memo(s, s"tokens:$d") {
-      val f = graft.Tables(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("source"),
-          explode(textTokens).as("term"))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else f
     }
 
   /** DuckDB twin of [[coPurchase]] — a CTE body ending at `oi(cust, supp)`.

@@ -74,6 +74,26 @@ class AnalyticsSpec extends SparkSpec {
     assert(sessions("q_sql_recursive") == sessions("q_stream_session"))
   }
 
+  test("q_sql_recursive leaves a user's own events and sess_lagged views bound") {
+    // the query must not rebind session-global names: views the user
+    // registered under the names it reads survive a run, and the result
+    // does not depend on them
+    val q = SparkEntry.queries("q_sql_recursive")
+    val want = q(spark, sf).collect().toSeq
+    try {
+      spark.range(3).toDF("mine").createOrReplaceTempView("events")
+      spark.range(5).toDF("mine").createOrReplaceTempView("sess_lagged")
+      assert(q(spark, sf).collect().toSeq === want)
+      assert(spark.table("events").columns.toSeq === Seq("mine"))
+      assert(spark.table("events").count() === 3)
+      assert(spark.table("sess_lagged").columns.toSeq === Seq("mine"))
+      assert(spark.table("sess_lagged").count() === 5)
+    } finally {
+      spark.catalog.dropTempView("events")
+      spark.catalog.dropTempView("sess_lagged")
+    }
+  }
+
   test("salted join spreads every build key over all 8 salt buckets") {
     // structural: the salted dim has exactly 8 rows per supplier, and the
     // physical plan honors the shuffle_hash hint (no broadcast — the
